@@ -24,6 +24,9 @@ from adlspark.llm.vector import (
     np_round_half_away,
     o_cosine,
     o_dot,
+    o_round_rel,
+    round_half_away,
+    round_rel,
 )
 from adlspark.registry import query
 
@@ -2160,7 +2163,18 @@ def _pca_power_oracle_sql(n_comp: int = PCA_COMPONENTS,
     to 1/√d each component. MATERIALIZED is load-bearing: the 20M-row
     covariance self-join must compute once, not once per CTE reference.
     ``n_comp``/``iters`` parameterize the unroll so the mutation
-    witness can prove the oracle pins the round count."""
+    witness can prove the oracle pins the round count.
+
+    Presentation rule: each eigenvalue is rounded to 6 decimals AND at
+    most 6 significant digits (``o_round_rel``, twin of the kernel's
+    ``round_rel``), in the ``eigenvalue`` column and in the
+    ``row_number`` ORDER BY alike. λ scales with |x|², and above ~2^33
+    a double's ulp exceeds a fixed 1e-6 grain, so plain ``round(l, 6)``
+    would let summation-order noise (DuckDB's multi-threaded sum vs
+    numpy's) reach the output hash — a corpus with norm-1e6 vectors
+    gives λ ≈ 2.3e10 and the engines differ there by one ulp. For
+    |λ| < 1 (every shipped fixture) the rule is exactly round(l, 6).
+    ``explained_ratio`` is scale-free and keeps round(x, 6)."""
     nan_free = "len(list_filter(embedding, x -> isnan(CAST(x AS DOUBLE)))) = 0"
     parts = [f"""WITH e AS MATERIALIZED (
   SELECT vec_id, embedding FROM embeddings
@@ -2219,9 +2233,9 @@ v0 AS MATERIALIZED (
     # deflation chain sorted, and the 'top-5' contract presents them
     # largest-first on both engines
     parts.append(f"""
-SELECT CAST(row_number() OVER (ORDER BY round(l, 6) DESC, dk) AS INT)
-         AS component,
-       round(l, 6) AS eigenvalue,
+SELECT CAST(row_number() OVER (ORDER BY {o_round_rel('l')} DESC, dk)
+             AS INT) AS component,
+       {o_round_rel('l')} AS eigenvalue,
        round(CASE WHEN (SELECT t FROM tr) = 0 THEN 0.0
                   ELSE l / (SELECT t FROM tr) END, 6) AS explained_ratio
 FROM ({union})
@@ -2274,8 +2288,16 @@ def llm_pca_power(spark, sf_dir):
     components (real embedding lakes) the same 16 rounds converge at
     rate (λ₂/λ₁)^16. Production use wanting exact spectra should raise
     PCA_ITERS — the contract form is unchanged.
-    Zero-norm matvec (C = 0, e.g. an all-identical corpus) keeps the
-    previous iterate on both sides; trace 0 pins explained_ratio to 0.
+    Eigenvalues are presented at 6 decimals and at most 6 significant
+    digits (``round_rel``; the oracle docstring says why): a huge-norm
+    corpus would otherwise leak one-ulp summation-order noise into the
+    output, while fixture values (|λ| < 1) round exactly as round(λ, 6).
+    Zero-norm matvec (C exactly 0 — only a SINGLE-vector corpus gives
+    that) keeps the previous iterate on both sides, and trace 0 pins
+    explained_ratio to 0. An all-identical corpus of several rows does
+    NOT give C = 0: E[xxᵀ] − μμᵀ leaves cancellation noise, so λ rounds
+    to ±0.0 but explained_ratio is noise over noise and can leave
+    [0, 1].
     Mutation witness: tests/test_promotion_mutation.py (iters and init
     both pinned); empty/hostile corpus gates: tests/test_promoted_empty
     + the embed-robustness sweeps.
@@ -2338,12 +2360,7 @@ def llm_pca_power(spark, sf_dir):
             # oracle's CASE does the same
         lam = float((Ck @ v) @ v)
         ratio = 0.0 if trace == 0.0 else lam / trace
-        vals.append(
-            (
-                float(np_round_half_away(np.asarray([lam]), 6)[0]),
-                float(np_round_half_away(np.asarray([ratio]), 6)[0]),
-            )
-        )
+        vals.append((round_rel(lam), round_half_away(ratio, 6)))
         if comp < PCA_COMPONENTS:
             Ck = Ck - lam * np.outer(v, v)
     # present largest-first (component = descending-value rank, rounded

@@ -11,6 +11,8 @@ whole-stage-codegen'd stages after a broadcast of the probe set.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -80,6 +82,49 @@ def np_round_half_away(x, ndigits: int = 4):
     return out
 
 
+def round_half_away(x: float, ndigits: int) -> float:
+    """Scalar twin of DuckDB's round(DOUBLE, n) for ANY sign of n.
+
+    DuckDB scales by 10^n (n ≥ 0: ``x·10^n``; n < 0: ``x / 10^-n``),
+    applies ``std::round`` and undoes the scale. ``std::round`` is
+    reproduced exactly — integer part plus one iff the fractional part
+    is ≥ 0.5, sign restored by copysign (so -0.3 → -0.0, like C++) —
+    with no magnitude precondition, unlike ``np_round_half_away``'s
+    |x·10^n| + 0.5 trick. Finite x only (the non-finite fallbacks of
+    DuckDB's round are not mirrored).
+    """
+    scale = 10.0 ** abs(ndigits)
+    s = x / scale if ndigits < 0 else x * scale
+    a = abs(s)
+    r = float(math.floor(a))
+    if a - r >= 0.5:  # a - floor(a) is exact for every double
+        r += 1.0
+    r = math.copysign(r, s)
+    return r * scale if ndigits < 0 else r / scale
+
+
+def round_rel(x: float) -> float:
+    """Round x to 6 decimals AND at most 6 significant digits — the
+    presentation grain for cross-engine doubles whose magnitude scales
+    with the data (|x|² outputs such as covariance eigenvalues). A fixed
+    1e-6 grain quantises nothing once the double's ulp exceeds it
+    (|x| ≳ 2^33), so summation-order noise would reach the output; a
+    grain relative to |x| keeps absorbing it. For |x| < 1 this is
+    exactly ``round(x, 6)``. Twin of ``o_round_rel`` bit for bit (same
+    libm log10 and pow on both sides — pinned by
+    tests/test_properties.py)."""
+    n = 6 if x == 0 else min(6, 5 - math.floor(math.log10(abs(x))))
+    return round_half_away(x, n)
+
+
+def o_round_rel(x: str) -> str:
+    """DuckDB twin of ``round_rel`` over the SQL expression ``x``."""
+    return (
+        f"round({x}, CAST(CASE WHEN {x} = 0 THEN 6"
+        f" ELSE LEAST(6, 5 - floor(log10(abs({x})))) END AS INTEGER))"
+    )
+
+
 # ---------------------------------------------------------------------------
 # Vector-domain contract (round-7 wave 5)
 # ---------------------------------------------------------------------------
@@ -94,6 +139,12 @@ def np_round_half_away(x, ndigits: int = 4):
 # asserted implicitly by the fixed-width matmul kernels: all non-empty
 # embeddings share one dimension, and |x| stays within DECIMAL(38,10)
 # whenever a key uses exact decimal summation (~1e27 headroom).
+# Outputs that scale with |x|² and are NOT exact-decimal sums (the
+# llm_pca_power eigenvalues) are rounded at a grain relative to their
+# size (round_rel / o_round_rel: 6 decimals, at most 6 significant
+# digits) rather than a fixed 1e-6, whose grain falls below a double's
+# ulp above ~2^33 — so a corpus with norms like 1e6 (λ ≈ 1e10) stays
+# in parity instead of exposing the engines' summation-order noise.
 #
 # NULL ELEMENTS (round 8, ENFORCED round 12): also outside the vector
 # domain. Until round 12 this was convention only — Arrow→pandas

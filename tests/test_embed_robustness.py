@@ -226,6 +226,47 @@ def test_null_element_parity(spark, null_elem_dir, key):
         con.close()
 
 
+@pytest.fixture(scope="module")
+def single_vec_dir(tmp_path_factory, sf_dir):
+    """An embeddings table of ONE vector: the only corpus whose
+    covariance is exactly 0 (several identical rows leave
+    E[xxᵀ] − μμᵀ cancellation noise)."""
+    d = tmp_path_factory.mktemp("singlevec")
+    for t in adl_tables.TABLES:
+        tbl = pq.read_table(os.path.join(sf_dir, f"{t}.parquet"))
+        if t == "embeddings":
+            tbl = tbl.slice(0, 1)
+        pq.write_table(tbl, str(d / f"{t}.parquet"))
+    return str(d)
+
+
+def test_pca_power_single_vector_parity(spark, single_vec_dir):
+    """C = 0 and trace = 0: every matvec has zero norm (both engines
+    keep the previous iterate), every eigenvalue rounds through the
+    λ = 0 guard of the relative rounding rule (log10 is undefined
+    there), and explained_ratio is pinned to 0 — kernel and oracle
+    must agree row for row."""
+    from adlspark.testing import compare
+
+    con = _ddb(single_vec_dir)
+    try:
+        df = all_queries()["llm_pca_power"](spark, single_vec_dir)
+        compare(df, con, all_oracles()["llm_pca_power"], key="llm_pca_power")
+        oracle_ratios = [
+            r[0] for r in con.execute(
+                f"SELECT explained_ratio FROM"
+                f" ({all_oracles()['llm_pca_power']})"
+            ).fetchall()
+        ]
+    finally:
+        con.close()
+    rows = df.collect()
+    assert len(rows) == 5 and len(oracle_ratios) == 5
+    assert all(r.eigenvalue == 0.0 for r in rows)
+    assert all(r.explained_ratio == 0.0 for r in rows)
+    assert all(x == 0.0 for x in oracle_ratios)
+
+
 def test_null_element_max_is_real(spark, null_elem_dir):
     """Direct statement of the fixed behavior: the null-first vector's
     max_elem is the real max of its non-null elements, not NULL."""

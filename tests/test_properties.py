@@ -845,6 +845,52 @@ def test_np_round_half_away_matches_duckdb_round():
     assert np.any(np.round(xs, 4) != got), "fixture never exercises the tie gap"
 
 
+def test_round_rel_matches_duckdb_round():
+    """llm_pca_power rounds eigenvalues to 6 decimals and at most 6
+    significant digits on both engines: round_rel in the kernel,
+    o_round_rel in the oracle. The two halves must agree bit for bit
+    (sign of zero included) from 1e-20 to 1e25 — above ~2^33 a fixed
+    1e-6 grain is below a double's ulp, which is what the relative
+    grain exists for — and at the rule's edges: zero (the log10
+    guard), a value that rounds up to the next decade (999999.5),
+    exact powers of ten, and tiny values that round to ±0.0."""
+    import duckdb
+    import numpy as np
+
+    from adlspark.llm.vector import o_round_rel, round_rel
+
+    rng = np.random.default_rng(7)
+    sweep = 10.0 ** rng.uniform(-20, 25, 20000)
+    sweep *= rng.choice([-1.0, 1.0], sweep.size)
+    edges = [0.0, -0.0, 1e-18, -1e-18, 1.0, -1.0, 999999.5, -999999.5,
+             1e10, 1e25, 0.5e-6, 2.5e-6, 0.49999999999999994,
+             23242630815.175564, 23242630815.175568]
+    xs = np.concatenate([np.array(edges), sweep])
+    got = np.array([round_rel(float(x)) for x in xs])
+    want = np.array(
+        [
+            r[0]
+            for r in duckdb.connect()
+            .execute(
+                f"SELECT {o_round_rel('x')}"
+                " FROM (SELECT unnest(?::DOUBLE[]) AS x)",
+                [xs.tolist()],
+            )
+            .fetchall()
+        ]
+    )
+    # compare bit patterns: == would equate 0.0 with -0.0
+    mism = np.nonzero(got.view(np.int64) != want.view(np.int64))[0]
+    assert mism.size == 0, (
+        f"{mism.size} mismatches, first at x={xs[mism[:5]]}:"
+        f" kernel {got[mism[:5]]} vs duckdb {want[mism[:5]]}"
+    )
+    # the sweep reaches the regime the relative grain exists for, where
+    # one ulp of summation-order noise must round away
+    assert np.any(np.abs(xs) > 2.0 ** 33)
+    assert round_rel(23242630815.175564) == round_rel(23242630815.175568)
+
+
 def test_kmeans_determinism_inertia_monotone_and_numpy_parity(spark, sf_dir):
     """The llm_kmeans bars its docstring promises: (a) the fixed-seed
     run is bit-deterministic; (b) per-iteration inertia is monotone
