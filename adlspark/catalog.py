@@ -228,17 +228,9 @@ def build_catalog(
 
 
 def entries_df(spark: SparkSession, entries: list[tuple]) -> DataFrame:
-    """Catalog rows → DataFrame via pandas/Arrow, NOT a plain Python list:
-    ``createDataFrame(list)`` parallelizes into a pickled Python RDD whose
-    every downstream evaluation round-trips a Python worker per partition
-    (a coalesced write of an 11-way union paid 350+ sequential worker
-    calls — 50 s for 110 rows). The Arrow path hands the JVM a local
-    batch; all later plan evaluation stays JVM-side."""
-    import pandas as pd
-
-    cols = [c.strip().split()[0] for c in CATALOG_SCHEMA.split(",")]
-    pdf = pd.DataFrame(entries, columns=cols)
-    return spark.createDataFrame(pdf, CATALOG_SCHEMA)
+    """Catalog rows → DataFrame (``tables.rows_df``: an Arrow local
+    relation, never a Python-worker RDD)."""
+    return tables.rows_df(spark, entries, CATALOG_SCHEMA)
 
 
 def search(catalog: DataFrame, pattern: str) -> DataFrame:
@@ -253,13 +245,21 @@ def search_tokens(catalog: DataFrame, terms: list[str]) -> DataFrame:
 
     The searchable text of an entry is its table name, file name, status
     and schema COLUMN NAMES (types stripped from schema_sig), lowercased
-    and split on non-identifier characters; a broadcast term list joins
-    against the exploded token index. Returns one row per matching entry
-    with the hit count and the sorted matched terms. At scale the token
-    explode is a narrow map over the (small) catalog and the term list is
-    a broadcast — no full-text infrastructure needed.
+    and split on non-identifier characters into a distinct token set.
+    Returns one row per (table_name, ingest_batch) with at least one hit:
+    ``n_hits`` counts the lowercased terms found in the token set WITH
+    their multiplicity in ``terms`` (a term listed twice counts twice),
+    and ``matched_terms`` is the sorted distinct matched terms,
+    space-joined. The empty term never matches.
+
+    Join-free: the term list rides the plan as one array literal that
+    each entry's token set is filtered against — a narrow projection —
+    followed by a single aggregate, so search costs what the catalog's
+    rows cost. A term table joined to exploded tokens would add an
+    explode, a broadcast join and, built from a Python list, Python-
+    worker tasks on every evaluation: a fixed cost larger than the work
+    on a metadata-sized catalog.
     """
-    spark = catalog.sparkSession
     # Strip types from schema_sig to leave only column names. A plain
     # ':[^,]*' strip breaks on comma-containing simpleStrings
     # (map<string,string>, struct<...>): the comma inside the generic ends
@@ -282,23 +282,18 @@ def search_tokens(catalog: DataFrame, terms: list[str]) -> DataFrame:
             names,
         )
     )
-    tok = catalog.select(
+    toks = F.split(text, "[^a-z0-9_]+")
+    wanted = F.array(*[F.lit(t.lower()) for t in terms if t]).cast("array<string>")
+    hits = catalog.select(
         "table_name",
         "ingest_batch",
-        F.explode(F.array_distinct(F.split(text, "[^a-z0-9_]+"))).alias("tok"),
-    ).where(F.col("tok") != "")
-    terms_df = spark.createDataFrame(
-        [(t.lower(),) for t in terms], "term string"
-    )
-    return (
-        tok.join(F.broadcast(terms_df), tok.tok == terms_df.term)
-        .groupBy("table_name", "ingest_batch")
-        .agg(
-            F.count(F.lit(1)).alias("n_hits"),
-            F.concat_ws(" ", F.sort_array(F.collect_set("term"))).alias(
-                "matched_terms"
-            ),
-        )
+        F.filter(wanted, lambda t: F.array_contains(toks, t)).alias("hit"),
+    ).where(F.size("hit") > 0)
+    return hits.groupBy("table_name", "ingest_batch").agg(
+        F.coalesce(F.sum(F.size("hit")), F.lit(0)).alias("n_hits"),
+        F.concat_ws(
+            " ", F.sort_array(F.array_distinct(F.flatten(F.collect_list("hit"))))
+        ).alias("matched_terms"),
     )
 
 

@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from adlspark import tables
+
 
 @dataclass
 class SourceConfig:
@@ -265,7 +267,7 @@ def record_alert(spark: SparkSession, alert_dir: str, entry: dict, detail: str =
         datetime.datetime.now(datetime.timezone.utc).replace(tzinfo=None),
         detail,
     )
-    spark.createDataFrame([row], ALERT_SCHEMA).write.mode("append").parquet(alert_dir)
+    tables.rows_df(spark, [row], ALERT_SCHEMA).write.mode("append").parquet(alert_dir)
 
 
 def ingest_with_alerts(

@@ -175,7 +175,7 @@ def llm_graph_pagerank(spark, sf_dir):
     docs = tables.load(spark, sf_dir, "documents").select("doc_id")
     n = tables.fast_count(spark, sf_dir, "documents")
     if n == 0:  # empty partition: no nodes, no ranks (round-9 corpus)
-        return spark.createDataFrame([], "doc_id long, rank double")
+        return tables.rows_df(spark, [], "doc_id long, rank double")
 
     # LUMPED (quotient-graph) iteration: docs with identical MinHash
     # signatures share every band bucket, so in the candidate graph they

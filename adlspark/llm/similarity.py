@@ -179,7 +179,8 @@ def llm_sim_threshold_join(spark, sf_dir):
     eb = g.select(F.col("gid").alias("vec_id"), "embedding").withColumn(
         "blk", F.pmod(F.col("vec_id"), F.lit(n_blocks)).cast("int")
     )
-    bp = spark.createDataFrame(
+    bp = tables.rows_df(
+        spark,
         [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
         "bi int, bj int",
     )
@@ -553,13 +554,10 @@ def llm_ann_ivf(spark, sf_dir):
             F.col("label").alias("cell"),
             F.transform("pc", lambda s: s.getField("c")).alias("centroid"),
         )
-        # cell-count-sized (the label domain); consumed by BOTH probe
-        # crossJoins in _ivf_probe_search — without the checkpoint each
-        # consumer replayed the full centroid aggregation from its own
-        # parquet scan (8 scans / 34 exchanges in the round-14 before
-        # plan; 16 exchanges after). Lazy: the first broadcast build
-        # materializes it.
-        .localCheckpoint(eager=False)
+        # cell-count-sized (the label domain): collected once, so the
+        # probe search's assignment and probe crossJoin both read the
+        # driver-side list instead of replaying the centroid aggregation
+        .collect()
     )
     # QUOTIENTED probe search (the llm_knn_label pattern): cell
     # assignment and every probe-candidate cosine depend on a row only
@@ -575,16 +573,17 @@ def llm_ann_ivf(spark, sf_dir):
         F.sort_array(F.collect_list("vec_id")).alias("members"),
         F.count(F.lit(1)).alias("cnt"),
     ).localCheckpoint(eager=False)  # lazy: first job materializes (assignment + probe quotient)
-    return _ivf_probe_search(g, cent)
+    return _ivf_probe_search(g, [(r["cell"], r["centroid"]) for r in cent])
 
 
-def _ivf_probe_search(g, cent, nprobe: int = 3, topk: int = 10):
+def _ivf_probe_search(g, cent_list, nprobe: int = 3, topk: int = 10):
     """The quotiented IVF probe search shared by ``llm_ann_ivf`` (label
     cells) and ``llm_ann_ivf_scaled`` (trained √N cells) — factored in
     round 14, expression-for-expression the round-11/12 kernel, so the
     label-cell key's plan is unchanged. ``g`` is the embedding quotient
     (gid, members, cnt, embedding — localCheckpointed by the caller),
-    ``cent`` a small (cell, centroid<array<double>>) frame (broadcast).
+    ``cent_list`` the model-sized [(cell, centroid)] list, broadcast to
+    the probes as an Arrow local relation.
     Probes = groups holding a member with id % 100 == 0; ranking is the
     round-4 cosine with (sim DESC, id ASC) order and count-aware
     margin-(topk+1) keeps before member expansion."""
@@ -595,7 +594,9 @@ def _ivf_probe_search(g, cent, nprobe: int = 3, topk: int = 10):
     # (optimization round 14: replaces crossJoin(broadcast(cent)) →
     # interpreted-HOF cosine → window argmax, same round-4 cosine
     # doubles and (csim DESC, cell ASC) order — see _cells_assign)
-    cent_list = [(r["cell"], r["centroid"]) for r in cent.collect()]
+    cent = tables.rows_df(
+        g.sparkSession, cent_list, "cell int, centroid array<double>"
+    )
     assigned = _cells_assign(
         g.select("gid", "members", "cnt", "embedding"), cent_list, metric="cos"
     )
@@ -868,8 +869,8 @@ def _cells_assign(df, cents, metric: str):
 
 def kmeans_cells(spark, g, k: int, iters: int = 2):
     """Fixed-round Lloyd over the UNIQUE-vector quotient ``g`` (gid,
-    embedding, ...), returning a (cell, centroid<array<double>>) frame —
-    the coarse-quantizer trainer for ``llm_ann_ivf_scaled``.
+    embedding, ...), returning the [(cell, centroid)] list — the
+    coarse-quantizer trainer for ``llm_ann_ivf_scaled``.
 
     Same determinism discipline as ``kmeans_fit`` (init = the k
     lowest-gid embeddings; exact-decimal centroid means rounded to 9
@@ -919,10 +920,7 @@ def kmeans_cells(spark, g, k: int, iters: int = 2):
             if r["m"] is not None:
                 new[r["cell"]][r["pos"]] = float(r["m"])
         cents = [new[c] for c in range(len(cents))]
-    return spark.createDataFrame(
-        [(c, cen) for c, cen in enumerate(cents)],
-        "cell int, centroid array<double>",
-    )
+    return list(enumerate(cents))
 
 
 def _ann_ivf_scaled_oracle_sql(nprobe: int = 3, iters: int = 2) -> str:
@@ -1049,8 +1047,8 @@ def llm_ann_ivf_scaled(spark, sf_dir):
     ).localCheckpoint(eager=False)  # lazy: n_u count below materializes it (training, assignment, probes)
     n_u = g.count()
     if n_u == 0:
-        return spark.createDataFrame(
-            [], "probe_id long, neighbor_id long, sim double, rnk long"
+        return tables.rows_df(
+            spark, [], "probe_id long, neighbor_id long, sim double, rnk long"
         )
     cent = kmeans_cells(spark, g, k=int(math.ceil(math.sqrt(n_u))), iters=2)
     return _ivf_probe_search(g, cent)
@@ -1444,25 +1442,8 @@ def kmeans_fit(spark, sf_dir, k=8, iters=5, track_inertia=False):
     inertia = []
     assign = None
     if not centroids:
-        from pyspark.sql.types import (
-            DoubleType,
-            IntegerType,
-            LongType,
-            StructField,
-            StructType,
-        )
-
         return (
-            spark.createDataFrame(
-                [],
-                StructType(
-                    [
-                        StructField("vec_id", LongType()),
-                        StructField("cluster", IntegerType()),
-                        StructField("sq_dist", DoubleType()),
-                    ]
-                ),
-            ),
+            tables.rows_df(spark, [], "vec_id long, cluster int, sq_dist double"),
             inertia,
         )
     for it in range(iters):
@@ -1904,8 +1885,8 @@ def llm_ann_ivf_pq(spark, sf_dir):
 
     codebook, sub = pq_fit(spark, sf_dir)
     if codebook is None:  # empty partition: nothing to index (round 9)
-        return spark.createDataFrame(
-            [], "probe_id long, neighbor_id long, adc_dist double, rnk int"
+        return tables.rows_df(
+            spark, [], "probe_id long, neighbor_id long, adc_dist double, rnk int"
         )
     cb = np.asarray(codebook, dtype=np.int64)  # (m, k, sub), grid ints
     m = cb.shape[0]
@@ -2313,8 +2294,8 @@ def llm_pca_power(spark, sf_dir):
     ).select("embedding")
     head = e.head(1)
     if not head:  # empty partition: no spectrum (round-9 corpus)
-        return spark.createDataFrame(
-            [], "component int, eigenvalue double, explained_ratio double"
+        return tables.rows_df(
+            spark, [], "component int, eigenvalue double, explained_ratio double"
         )
     d = len(head[0]["embedding"])
 
@@ -2371,8 +2352,8 @@ def llm_pca_power(spark, sf_dir):
     rows = [
         (rank + 1, vals[i][0], vals[i][1]) for rank, i in enumerate(order)
     ]
-    return spark.createDataFrame(
-        rows, "component int, eigenvalue double, explained_ratio double"
+    return tables.rows_df(
+        spark, rows, "component int, eigenvalue double, explained_ratio double"
     )
 
 
@@ -2486,7 +2467,8 @@ def llm_knn_graph(spark, sf_dir):
     eb = g.select("gid", "embedding", "cnt").withColumn(
         "blk", F.pmod(F.col("gid"), F.lit(n_blocks)).cast("int")
     )
-    bp = spark.createDataFrame(
+    bp = tables.rows_df(
+        spark,
         [(i, j) for i in range(n_blocks) for j in range(i, n_blocks)],
         "bi int, bj int",
     )
@@ -2890,7 +2872,8 @@ def llm_mmr_diverse_sample(spark, sf_dir):
         s = x * (10.0 ** nd)
         return math.copysign(math.floor(abs(s) + 0.5), s) / (10.0 ** nd)
 
-    return spark.createDataFrame(
+    return tables.rows_df(
+        spark,
         [(r + 1, vid, _round_away(s)) for r, (vid, s) in enumerate(picked)],
         "pick_rank int, vec_id long, score double",
     )

@@ -569,7 +569,8 @@ def llm_bpe_learn(spark, sf_dir):
         .where(F.col("word") != "")
     )
     merges = _bpe_learn_merges(spark, words, rounds=6)
-    return spark.createDataFrame(
+    return tables.rows_df(
+        spark,
         merges,
         "merge_rank int, left string, right string, merged string, pair_count long",
     )

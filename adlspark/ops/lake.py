@@ -92,9 +92,9 @@ def _corpus_text(t: str) -> str:
 def catalog_search_tokens(spark, sf_dir):
     """Tokenized full-text catalog search — the reference's Elasticsearch
     entry point collapsed into the engine (SURVEY §3.1 entry point 2):
-    catalog entries explode into an inverted token index (name, filename,
-    status, schema column names) and a broadcast term list joins against
-    it, returning hit counts + matched terms per entry. The oracle
+    each catalog entry's token set (name, filename, status, schema column
+    names) is filtered against the term list, returning hit counts +
+    matched terms per entry (``catalog.search_tokens``). The oracle
     reconstructs the same corpus from the fixture tables' static schema.
     """
     c = cat.build_catalog(spark, sf_dir, batch_id="batch-0", seq=0)
@@ -415,7 +415,8 @@ def ingest_schema_evolution(spark, sf_dir):
         f"{f.name}:{f.dataType.simpleString()}" for f in state["schema"].fields
     )
     audit.append(("final", "READ", state["version"], sig, final.count()))
-    return spark.createDataFrame(
+    return tables.rows_df(
+        spark,
         audit,
         "batch string, status string, schema_version long, detail string, n_rows long",
     )
@@ -930,18 +931,13 @@ def lake_schema_diff(spark, sf_dir):
     Scale shape: schema rows are metadata (a handful per table version,
     from catalog entries — never a data scan); the diff join is
     metadata-sized at any lake size."""
-    import pandas as pd
-
     c = tables.load(spark, sf_dir, "customer")
     v1_rows = [(f.name, f.dataType.simpleString()) for f in c.schema.fields]
     drift = {"c_nationkey": "bigint"}
     v2_rows = [
         (n, drift.get(n, t)) for n, t in v1_rows if n != "c_mktsegment"
     ] + [("c_phone", "string")]
-    mk = lambda rows: spark.createDataFrame(
-        pd.DataFrame(rows, columns=["col_name", "col_type"]),
-        "col_name string, col_type string",
-    )
+    mk = lambda rows: tables.rows_df(spark, rows, "col_name string, col_type string")
     v1, v2 = mk(v1_rows).alias("v1"), mk(v2_rows).alias("v2")
     j = v1.join(v2, on="col_name", how="full_outer")
     return j.select(
@@ -1008,7 +1004,8 @@ def lake_time_travel(spark, sf_dir):
         (2, [("supplier", counts["supplier"]), ("part", counts["part"])]),
     ]
     for seq, rows in batches:
-        df = spark.createDataFrame(
+        df = tables.rows_df(
+            spark,
             [(t, seq, n, f"2026-01-0{seq + 1} 00:00:00") for t, n in rows],
             "table_name string, seq int, row_count long, ingested_at string",
         ).withColumn("ingested_at", F.to_timestamp("ingested_at"))
@@ -1144,7 +1141,8 @@ def lake_vacuum_orphans(spark, sf_dir):
         ev.coalesce(1).write.mode("overwrite").parquet(
             os.path.join(staged_root, b)
         )
-    referenced = spark.createDataFrame(
+    referenced = tables.rows_df(
+        spark,
         [("b0",), ("b2",)], "batch string"
     )  # b1 aborted before its catalog append
 
@@ -1280,7 +1278,8 @@ def lake_snapshot_rollback(spark, sf_dir):
         (3, [("supplier", n["supplier"], False), ("part", 0, True)]),
     ]
     for seq, rows in batches:
-        df = spark.createDataFrame(
+        df = tables.rows_df(
+            spark,
             [
                 (t, seq, rc, f"2026-01-0{seq + 1} 00:00:00", dele)
                 for t, rc, dele in rows
@@ -1386,13 +1385,15 @@ def lake_write_audit_publish(spark, sf_dir):
     publish = all(p for _, p in rules)
 
     if publish:
-        entry = spark.createDataFrame(
+        entry = tables.rows_df(
+            spark,
             [("orders_staged", 0, audit_row["n"], "2026-01-01 00:00:00")],
             "table_name string, seq int, row_count long, ingested_at string",
         ).withColumn("ingested_at", F.to_timestamp("ingested_at"))
         cat.append_entries(entry, log_dir)
 
-    return spark.createDataFrame(
+    return tables.rows_df(
+        spark,
         [
             (
                 rule,

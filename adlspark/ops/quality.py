@@ -225,7 +225,8 @@ def lake_gdpr_delete(spark, sf_dir):
             "n_rows",
         )
     )
-    summary = spark.createDataFrame(
+    summary = tables.rows_df(
+        spark,
         [("summary", None, kept_n)], "record_type string, user_id long, n_rows long"
     )
     return audit.unionByName(summary)

@@ -154,7 +154,8 @@ def ingest_validate_json(spark, sf_dir):
         staged_dir=os.path.join(raw_dir, "staged"),
         quarantine_dir=os.path.join(raw_dir, "quarantine"),
     )
-    return spark.createDataFrame(
+    return tables.rows_df(
+        spark,
         [
             ("good", entry["n_good"]),
             ("quarantined", entry["n_quarantined"]),
@@ -255,7 +256,11 @@ FROM events GROUP BY event_type
 def stream_file_source(spark, sf_dir):
     """Incremental file discovery (the S3-event trigger analogue):
     readStream over the events parquet with availableNow, complete-mode
-    counts into a memory sink — output must equal the batch counts."""
+    counts into a memory sink — output must equal the batch counts. The
+    query runs on a ``streams.stream_session`` sized to the events
+    backlog."""
+    from adlspark.streaming.streams import events_path, stream_session
+
     schema = StructType(
         [
             StructField("event_id", LongType()),
@@ -266,8 +271,9 @@ def stream_file_source(spark, sf_dir):
             StructField("props", StringType()),
         ]
     )
+    scoped = stream_session(spark, [events_path(sf_dir)])
     stream = (
-        spark.readStream.schema(schema)
+        scoped.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
@@ -280,7 +286,7 @@ def stream_file_source(spark, sf_dir):
         .start()
     )
     q.awaitTermination(120)
-    return spark.table("sfs_counts")
+    return scoped.table("sfs_counts")
 
 
 @query(
@@ -415,7 +421,7 @@ def ingest_idempotent(spark, sf_dir):
         # empty append is a no-op — no pre-count needed)
         fresh.write.mode("append").parquet(staged)
         results.append((arrival, spark.read.parquet(staged).count()))
-    return spark.createDataFrame(results, "arrival int, staged_total long")
+    return tables.rows_df(spark, results, "arrival int, staged_total long")
 
 
 @query(
@@ -455,7 +461,8 @@ def join_dpp_prune(spark, sf_dir):
     )
     ev.write.mode("overwrite").partitionBy("event_date").parquet(fact_path)
     dim_path = os.path.join(base, "date_dim")
-    spark.createDataFrame(
+    tables.rows_df(
+        spark,
         [
             ("2024-01-05", "normal"),
             ("2024-01-10", "peak"),

@@ -79,14 +79,18 @@ def build_spark(app_name: str = "adlspark", master: str | None = None) -> SparkS
     builder = SparkSession.builder.appName(app_name).master(master)
     for k, v in session_confs().items():
         builder = builder.config(k, v)
-    return builder.getOrCreate()
+    spark = builder.getOrCreate()
+    _ship_package(spark)
+    return spark
 
 
 def _ship_package(spark: SparkSession) -> None:
     """Make ``adlspark`` importable on executor Python workers regardless
-    of their CWD/sys.path: zip the package once and addPyFile it.
-    Closures are written to avoid module-reference pickling anyway; this
-    is the defensive second layer."""
+    of their CWD/sys.path: addPyFile the package zip. Kernels whose
+    worker code imports ``adlspark`` (the k-means/IVF/kNN Arrow maps,
+    ``ts_ewma``) fail with ``No module named 'adlspark'`` without it
+    when the working directory is not the repo root. The zip is built
+    once per content hash."""
     import hashlib
     import tempfile
     import zipfile

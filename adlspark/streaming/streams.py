@@ -39,18 +39,110 @@ measured 246 s default vs 53.5 s with
 Kernels stay on the default (KB-scale state at driver-check SF, where
 HDFSBacked is faster); deployments past ~100 MB state/partition should
 set the RocksDB provider.
+
+Query-scoped sessions: every kernel starts its query on the session
+``stream_session`` returns — ``spark.newSession()`` over the same
+SparkContext, carrying a copy of the caller's modifiable SQL conf and
+the caller's StreamingQueryListeners (a listener registered on the
+caller's session sees the kernel's progress). Per-query settings land
+on that session only; no kernel writes the caller's conf. Two are set:
+
+- Stateful partitions: ``spark.sql.shuffle.partitions`` becomes
+  ceil(backlog bytes / ``spark.sql.adaptive.advisoryPartitionSizeInBytes``)
+  clamped to [1, the caller's count] — the count AQE would coalesce a
+  batch shuffle of that input to. AQE cannot re-plan streaming state,
+  and the count is fixed into the checkpoint at first start, so a
+  0.2 MB backlog otherwise ran 32 state stores per micro-batch. A
+  backlog on a non-local path keeps the caller's count.
+- No-data micro-batches: off only for kernels whose output never
+  depends on watermark-driven emission (``no_data_batches=False``:
+  the append-mode inner ``stream_stream_join``, which emits each match
+  as it is found, and ``stream_dedup_watermark``, which emits each
+  first occurrence at once). Their no-data batch only evicts state —
+  eviction the next data batch performs with the same watermark — so
+  the output is unchanged and availableNow ends after the data
+  batches. Window kernels in append mode keep it: their last windows
+  are emitted by that batch.
 """
 
 from __future__ import annotations
 
+import math
+import os
 import shutil
 import uuid
 
 import pandas as pd
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from adlspark import tables
 from adlspark.io.ingest import work_dir
 from adlspark.registry import query
+
+
+def _backlog_bytes(paths: list[str]) -> int | None:
+    """Bytes of the data files under local ``paths`` (bookkeeping files
+    starting with '_' or '.' excluded); None when a path is not local."""
+    total = 0
+    for p in paths:
+        if os.path.isfile(p):
+            total += os.path.getsize(p)
+        elif os.path.isdir(p):
+            for root, _d, files in os.walk(p):
+                total += sum(
+                    os.path.getsize(os.path.join(root, f))
+                    for f in files
+                    if not f.startswith(("_", "."))
+                )
+        else:
+            return None
+    return total
+
+
+def stream_session(
+    spark: SparkSession,
+    backlog: list[str],
+    *,
+    no_data_batches: bool = True,
+) -> SparkSession:
+    """The query-scoped session a streaming kernel starts its query on
+    (module docstring): the caller's modifiable SQL conf and streaming
+    listeners, stateful partitions sized to the ``backlog`` paths'
+    bytes, no-data micro-batches off unless ``no_data_batches``. The
+    caller's session is only read."""
+    scoped = spark.newSession()
+    for k, v in spark.conf.getAll.items():
+        if spark.conf.isModifiable(k):
+            scoped.conf.set(k, v)
+    jstreams = scoped._jsparkSession.streams()
+    for listener in spark._jsparkSession.streams().listListeners():
+        jstreams.addListener(listener)
+    n_bytes = _backlog_bytes(backlog)
+    if n_bytes is not None:
+        advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
+            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        )
+        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        n = min(cap, max(1, math.ceil(n_bytes / advisory)))
+        scoped.conf.set("spark.sql.shuffle.partitions", str(n))
+    if not no_data_batches:
+        scoped.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+    return scoped
+
+
+def events_path(sf_dir: str) -> str:
+    return os.path.join(sf_dir, "events.parquet")
+
+
+def scoped_events(spark, sf_dir, no_data_batches: bool = True):
+    """``events_stream`` on a ``stream_session`` sized to the events
+    backlog."""
+    scoped = stream_session(
+        spark, [events_path(sf_dir)], no_data_batches=no_data_batches
+    )
+    return events_stream(scoped, sf_dir)
+
 
 def events_stream(spark, sf_dir):
     """readStream over the events fixture with ``ts`` normalized to a
@@ -66,11 +158,7 @@ def events_stream(spark, sf_dir):
     part files (the production layout — and the 10x stress set's) is
     monitored directly; both shapes stream identically.
     """
-    import os as _os
-
-    from adlspark import tables
-
-    path = _os.path.join(sf_dir, "events.parquet")
+    path = events_path(sf_dir)
     # schema via tables.load: one memoized footer read instead of a
     # per-key schema-inference job (round-14 optimization; see tables.py)
     batch_schema = tables.load(spark, sf_dir, "events").schema
@@ -82,7 +170,7 @@ def events_stream(spark, sf_dir):
     # instead of the one-data-batch availableNow default. Unset in the
     # driver harness: the single-batch premise several value oracles
     # pin (see _ssj_oracle_sql) stays the default contract.
-    max_files = _os.environ.get("ADLSPARK_STREAM_MAX_FILES")
+    max_files = os.environ.get("ADLSPARK_STREAM_MAX_FILES")
     if max_files:
         try:
             n_files = int(max_files)
@@ -95,7 +183,7 @@ def events_stream(spark, sf_dir):
                 f"ADLSPARK_STREAM_MAX_FILES={max_files!r} must be >= 1"
             )
         reader = reader.option("maxFilesPerTrigger", n_files)
-    if _os.path.isdir(path):
+    if os.path.isdir(path):
         s = reader.parquet(path)
     else:
         s = reader.option("pathGlobFilter", "events.parquet").parquet(sf_dir)
@@ -107,42 +195,49 @@ def events_stream(spark, sf_dir):
     return s
 
 
-# Diagnostics: recentProgress dicts of the most recent _run-managed query
+# Diagnostics: recentProgress dicts of the most recent _drain-managed query
 # (state-store rows/bytes, watermark drops). Observation only — written
 # after the query terminates; tools/stress_stream.py reads it for the
 # hot-key state-store ladder. Not part of any kernel's result.
 LAST_QUERY_PROGRESS: list = []
 
 
-def _run(df_writer, name: str):
-    q = df_writer.queryName(name).trigger(availableNow=True).start()
+def _drain(df, mode: str, name: str):
+    """Drain ``df`` into the memory sink ``name`` (output ``mode``) and
+    return the sink table, read on ``df``'s scoped session."""
+    q = (
+        df.writeStream.format("memory")
+        .outputMode(mode)
+        .queryName(name)
+        .trigger(availableNow=True)
+        .start()
+    )
     finished = q.awaitTermination(600)
     LAST_QUERY_PROGRESS[:] = list(q.recentProgress)
     if not finished:
         q.stop()
         raise RuntimeError(f"streaming query {name} did not finish in 600s")
+    return df.sparkSession.table(name)
 
 
 @query("stream_tumbling_watermark")
 def stream_tumbling_watermark(spark, sf_dir):
     """Tumbling 1-h windows with a 10-min watermark, append mode: only
     windows finalized by the advancing watermark are emitted."""
-    ev = events_stream(spark, sf_dir)
+    ev = scoped_events(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(F.col("w.start").alias("w_start"), "event_type", "n")
     )
-    name = "s_tumbling"
-    _run(agg.writeStream.format("memory").outputMode("append"), name)
-    return spark.table(name)
+    return _drain(agg, "append", "s_tumbling")
 
 
 @query("stream_session_window")
 def stream_session_window(spark, sf_dir):
     """Session windows (5-min gap) per user in streaming mode."""
-    ev = events_stream(spark, sf_dir)
+    ev = scoped_events(spark, sf_dir)
     agg = (
         ev.withWatermark("ts", "10 minutes")
         .groupBy(F.session_window("ts", "5 minutes").alias("sw"), "user_id")
@@ -154,28 +249,22 @@ def stream_session_window(spark, sf_dir):
             "n",
         )
     )
-    name = "s_session"
-    _run(agg.writeStream.format("memory").outputMode("append"), name)
-    return spark.table(name)
+    return _drain(agg, "append", "s_session")
 
 
 @query("stream_dedup_watermark")
 def stream_dedup_watermark(spark, sf_dir):
     """Stateful dedup on event_id within the watermark horizon
-    (dropDuplicatesWithinWatermark, state evicted as watermark passes)."""
-    ev = events_stream(spark, sf_dir)
+    (dropDuplicatesWithinWatermark, state evicted as watermark passes).
+    Each first occurrence is emitted at once, so no no-data batch."""
+    ev = scoped_events(spark, sf_dir, no_data_batches=False)
     deduped = ev.withWatermark("ts", "10 minutes").dropDuplicatesWithinWatermark(
         ["event_id"]
     )
-    name = "s_dedup"
-    _run(
-        deduped.select("event_id", "user_id", "event_type").writeStream.format(
-            "memory"
-        ).outputMode("append"),
-        name,
-    )
     return (
-        spark.table(name)
+        _drain(
+            deduped.select("event_id", "user_id", "event_type"), "append", "s_dedup"
+        )
         .groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("n_unique"))
     )
@@ -186,21 +275,17 @@ def stream_static_join(spark, sf_dir):
     """Stream-static enrichment: the event stream joined to a static user
     dimension (derived once, batch-side); the static side is re-read per
     micro-batch and broadcast."""
-    from adlspark import tables
-
+    ev = scoped_events(spark, sf_dir)
     static_users = (
-        tables.events(spark, sf_dir)
+        tables.events(ev.sparkSession, sf_dir)
         .groupBy("user_id")
         .agg(F.min("ts").alias("first_seen"))
         .withColumn("cohort", (F.col("user_id") % 3).cast("int"))
         .select("user_id", "cohort")
     )
-    ev = events_stream(spark, sf_dir)
     joined = ev.join(F.broadcast(static_users), on="user_id")
     agg = joined.groupBy("cohort").agg(F.count(F.lit(1)).alias("n"))
-    name = "s_static_join"
-    _run(agg.writeStream.format("memory").outputMode("complete"), name)
-    return spark.table(name)
+    return _drain(agg, "complete", "s_static_join")
 
 
 @query("stream_stateful_count")
@@ -216,7 +301,7 @@ def stream_stateful_count(spark, sf_dir):
         state.update((n,))
         yield pd.DataFrame({"user_id": [key[0]], "n_events": [n]})
 
-    ev = events_stream(spark, sf_dir)
+    ev = scoped_events(spark, sf_dir)
     counts = ev.groupBy("user_id").applyInPandasWithState(
         count_fn,
         outputStructType="user_id long, n_events long",
@@ -224,10 +309,8 @@ def stream_stateful_count(spark, sf_dir):
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    name = "s_stateful"
-    _run(counts.writeStream.format("memory").outputMode("update"), name)
     # latest state per user (update mode may emit a row per batch)
-    t = spark.table(name)
+    t = _drain(counts, "update", "s_stateful")
     return t.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
 
 
@@ -251,7 +334,7 @@ def stream_foreach_batch_upsert(spark, sf_dir):
             .parquet(out_dir)
         )
 
-    ev = events_stream(spark, sf_dir)
+    ev = scoped_events(spark, sf_dir)
     q = (
         ev.writeStream.foreachBatch(upsert)
         .option("checkpointLocation", ckpt)
@@ -287,8 +370,8 @@ def stream_transform_with_state(spark, sf_dir):
     """Spark 4 stateful-processing v2 (transformWithStateInPandas): a
     StatefulProcessor keeping a per-user running count in a ValueState —
     the successor API to applyInPandasWithState, with typed state,
-    timers, and RocksDB-backed stores (required provider; set per
-    session).
+    timers, and RocksDB-backed stores (required provider; set on the
+    query-scoped session).
 
     Value-oracle (round 12, promoted from rows-only): the drained
     final state is a pure corpus function (per-user count) on either
@@ -313,11 +396,7 @@ def stream_transform_with_state(spark, sf_dir):
 
     from pyspark.sql.streaming import StatefulProcessor
 
-    prev = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
+    from adlspark.session import ROCKSDB_PROVIDER
 
     class CountProcessor(StatefulProcessor):
         def init(self, handle):
@@ -333,21 +412,17 @@ def stream_transform_with_state(spark, sf_dir):
         def close(self):
             pass
 
-    try:
-        ev = events_stream(spark, sf_dir)
-        counts = ev.groupBy("user_id").transformWithStateInPandas(
-            statefulProcessor=CountProcessor(),
-            outputStructType="user_id long, n_events long",
-            outputMode="Update",
-            timeMode="None",
-        )
-        name = "s_tws"
-        _run(counts.writeStream.format("memory").outputMode("update"), name)
-        t = spark.table(name)
-        return t.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
-    finally:
-        if prev is not None:
-            spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
+    scoped = stream_session(spark, [events_path(sf_dir)])
+    scoped.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
+    ev = events_stream(scoped, sf_dir)
+    counts = ev.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=CountProcessor(),
+        outputStructType="user_id long, n_events long",
+        outputMode="Update",
+        timeMode="None",
+    )
+    t = _drain(counts, "update", "s_tws")
+    return t.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
 
 
 def _ssj_oracle_sql(window_min: int = 15) -> str:
@@ -355,8 +430,8 @@ def _ssj_oracle_sql(window_min: int = 15) -> str:
     whole backlog lands in ONE data micro-batch — the file source
     without maxFilesPerTrigger gives availableNow everything at once,
     for single-file fixtures AND Spark-written directories alike
-    (probed: a 4-part directory reads as batch 0 = all rows + an empty
-    finalization batch; pinned by
+    (probed: a 4-part directory reads as batch 0 = all rows, and no
+    further batch with no-data batches off; pinned by
     tests/test_streaming_equivalence.py::test_ssj_oracle_holds_on_
     directory_layout). Within one batch an APPEND-mode inner
     stream-stream join emits each match immediately — inner joins
@@ -408,11 +483,14 @@ def stream_stream_join(spark, sf_dir):
     Without it, one hot user's state rows all share a single join key
     and every probe scans the user's whole buffered history — the
     10x-skew sweep measured 180 s; banding cuts the per-probe candidate
-    set to two 15-minute buckets."""
+    set to two 15-minute buckets.
+
+    No no-data batch: an inner join emits each match in the batch that
+    finds it (module docstring)."""
     from adlspark.ops.banding import banded_assignments, time_bucket
 
     BUCKET_US = 900 * 1000000  # one join-window width: 15 minutes
-    ev = events_stream(spark, sf_dir)
+    ev = scoped_events(spark, sf_dir, no_data_batches=False)
     views = (
         ev.where(F.col("event_type") == "view")
         .select(
@@ -438,15 +516,12 @@ def stream_stream_join(spark, sf_dir):
         & (F.col("purchase_ts") >= F.col("view_ts"))
         & (F.col("purchase_ts") <= F.col("view_ts") + F.expr("INTERVAL 15 MINUTES")),
     )
-    name = "s_ss_join"
-    _run(
-        attributed.select("user_id", "view_ts", "purchase_ts")
-        .writeStream.format("memory")
-        .outputMode("append"),
-        name,
-    )
     return (
-        spark.table(name)
+        _drain(
+            attributed.select("user_id", "view_ts", "purchase_ts"),
+            "append",
+            "s_ss_join",
+        )
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n_attributed"))
     )
@@ -516,7 +591,7 @@ def stream_tumbling_ohlc(spark, sf_dir):
     pure corpus function (the ts_tumbling/ts_sliding batch precedent);
     _stream_ohlc_oracle_sql mirrors the full aggregate including the
     (ts, event_id) open/close tiebreak and the null-ts window drop."""
-    ev = events_stream(spark, sf_dir)
+    ev = scoped_events(spark, sf_dir)
     agg = ev.groupBy(
         F.window("ts", "1 day").alias("w"), "user_id"
     ).agg(
@@ -534,9 +609,7 @@ def stream_tumbling_ohlc(spark, sf_dir):
         "close_v",
         "n",
     )
-    name = "s_ohlc"
-    _run(agg.writeStream.format("memory").outputMode("complete"), name)
-    return spark.table(name)
+    return _drain(agg, "complete", "s_ohlc")
 
 
 def _stream_sliding_oracle_sql(slide: int = 1800) -> str:
@@ -575,7 +648,7 @@ def stream_sliding_watermark(spark, sf_dir):
     complete mode over non-late static data makes the sink table a
     pure corpus function; the oracle is the hash-green ts_sliding form
     with the event_type key added."""
-    ev = events_stream(spark, sf_dir)
+    ev = scoped_events(spark, sf_dir)
     agg = (
         ev.groupBy(F.window("ts", "1 hour", "30 minutes").alias("w"), "event_type")
         .agg(
@@ -585,9 +658,7 @@ def stream_sliding_watermark(spark, sf_dir):
             F.unix_timestamp(F.col("w.start")).alias("w_epoch"), "event_type", "n"
         )
     )
-    name = "s_sliding"
-    _run(agg.writeStream.format("memory").outputMode("complete"), name)
-    return spark.table(name)
+    return _drain(agg, "complete", "s_sliding")
 
 
 @query("stream_hll_distinct")
@@ -601,7 +672,7 @@ def stream_hll_distinct(spark, sf_dir):
     batch-equivalence pytest pins the streaming estimates exactly equal
     to the batch hll_sketch_agg of the same windows (same algorithm,
     same multiset — determinism the sketch guarantees)."""
-    ev = events_stream(spark, sf_dir)
+    ev = scoped_events(spark, sf_dir)
     agg = (
         ev.groupBy(F.window("ts", "1 day").alias("w"))
         .agg(
@@ -612,9 +683,7 @@ def stream_hll_distinct(spark, sf_dir):
         )
         .select(F.col("w.start").alias("day_start"), "distinct_users_est", "n_events")
     )
-    name = "s_hll_distinct"
-    _run(agg.writeStream.format("memory").outputMode("complete"), name)
-    return spark.table(name)
+    return _drain(agg, "complete", "s_hll_distinct")
 
 
 @query(
@@ -650,8 +719,6 @@ def stream_checkpoint_recovery(spark, sf_dir):
     a production pipeline survives executor loss, deploys, and
     backfills without reprocessing corpus-scale input.
     """
-    from adlspark import tables
-
     base = work_dir(sf_dir, "ckpt_recovery")
     # wipe prior invocations' staging/checkpoints (they accumulate a full
     # events copy per run), then use a fresh run id: recovery must start
@@ -670,9 +737,11 @@ def stream_checkpoint_recovery(spark, sf_dir):
     half1.write.mode("overwrite").parquet(in_dir)
 
     schema = spark.read.parquet(in_dir).schema
+    # both arrivals together are the events backlog
+    scoped = stream_session(spark, [events_path(sf_dir)])
 
     def run_query():
-        s = spark.readStream.schema(schema).parquet(in_dir)
+        s = scoped.readStream.schema(schema).parquet(in_dir)
         q = (
             s.writeStream.format("parquet")
             .option("path", sink)
@@ -738,17 +807,13 @@ def stream_rate_limited_backfill(spark, sf_dir):
     wrong for 1-7-row corpora. The single-partition ntile sort is
     fixture CONSTRUCTION (a real backfill's staged history already
     exists); only the drain below is the pattern under test."""
-    import os as _os
-
     from pyspark.sql import Window as _W
 
     base = work_dir(sf_dir, "backfill")
-    staged = _os.path.join(base, "staged")
-    from adlspark import tables as _tables
-
-    src = _tables.load(spark, sf_dir, "events")
+    staged = os.path.join(base, "staged")
+    src = tables.load(spark, sf_dir, "events")
     shutil.rmtree(staged, ignore_errors=True)
-    n_rows = _tables.fast_count(spark, sf_dir, "events")
+    n_rows = tables.fast_count(spark, sf_dir, "events")
     n_files = min(n_rows, 8)
     if n_rows >= 64:
         # cheap path: round-robin repartition — with ≥64 rows every
@@ -781,7 +846,7 @@ def stream_rate_limited_backfill(spark, sf_dir):
         # reads with an explicit schema) so the drain still runs
         src.write.mode("overwrite").parquet(staged)
     actual = len(
-        [f for f in _os.listdir(staged) if f.startswith("part-")]
+        [f for f in os.listdir(staged) if f.startswith("part-")]
     )
     if n_rows > 0 and actual != n_files:
         # loud invariant instead of a silent oracle divergence: the
@@ -801,21 +866,23 @@ def stream_rate_limited_backfill(spark, sf_dir):
         batches.append((int(batch_id), batch_df.count()))
 
     q = (
-        spark.readStream.schema(src.schema)
+        stream_session(spark, [staged])
+        .readStream.schema(src.schema)
         .option("maxFilesPerTrigger", 3)
         .parquet(staged)
         .writeStream.foreachBatch(record)
         .trigger(availableNow=True)
         .option(
             "checkpointLocation",
-            _os.path.join(base, f"ckpt-{uuid.uuid4().hex[:8]}"),
+            os.path.join(base, f"ckpt-{uuid.uuid4().hex[:8]}"),
         )
         .start()
     )
     if not q.awaitTermination(600):
         q.stop()
         raise RuntimeError("backfill drain did not finish in 600s")
-    return spark.createDataFrame(
+    return tables.rows_df(
+        spark,
         [
             (
                 len(batches),

@@ -59,9 +59,11 @@ SUMMARY_LINE_BUDGET = 1800
 
 def fit_top_queries(timings, summary, budget: int = SUMMARY_LINE_BUDGET):
     """Largest descending-cost prefix of ``timings`` whose inclusion keeps
-    ``json.dumps(summary)`` within ``budget`` bytes. Deterministic: keys
-    ordered by (-seconds, name); stops at the first key that does not fit
-    so the subset is always exactly "the N most expensive keys"."""
+    ``json.dumps(summary)`` within ``budget`` bytes — UTF-8 bytes of the
+    line as printed, the unit of the driver's byte-bounded tail capture.
+    Deterministic: keys ordered by (-seconds, name); stops at the first
+    key that does not fit so the subset is always exactly "the N most
+    expensive keys"."""
     chosen: dict[str, float] = {}
     trial = dict(summary)
     for k in sorted(timings, key=lambda k: (-timings[k], k)):
@@ -69,7 +71,7 @@ def fit_top_queries(timings, summary, budget: int = SUMMARY_LINE_BUDGET):
         cand[k] = timings[k]
         trial["queries"] = cand
         trial["queries_omitted"] = len(timings) - len(cand)
-        if len(json.dumps(trial)) > budget:
+        if len(json.dumps(trial).encode()) > budget:
             break
         chosen = cand
     return chosen

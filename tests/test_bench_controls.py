@@ -131,6 +131,26 @@ def test_fit_top_queries_small_set_fits_entirely():
     assert sub == {"agg_stats": 1.0, "join_inner": 0.4}
 
 
+def test_fit_top_queries_budget_counts_bytes():
+    """A non-ASCII key is budgeted by the UTF-8 bytes of the line as
+    printed, not by its characters."""
+    import json
+
+    timings = {f"ключ_{i:03d}": float(300 - i) for i in range(300)}
+    summary = {"metric": "total_wall_sec", "note": "é" * 40}
+    sub = bench.fit_top_queries(timings, summary, budget=600)
+    summary["queries"] = sub
+    summary["queries_omitted"] = len(timings) - len(sub)
+    line = json.dumps(summary)
+    assert len(line.encode()) <= 600
+    assert sub  # some keys fit
+    # the next key would have crossed the byte budget
+    nxt = sorted(timings, key=lambda k: (-timings[k], k))[len(sub)]
+    summary["queries"] = dict(sub, **{nxt: timings[nxt]})
+    summary["queries_omitted"] -= 1
+    assert len(json.dumps(summary).encode()) > 600
+
+
 def test_window_constants_sane():
     # the interleave must cover a 257-key run with >=2 windows for the
     # median to mean anything, and the control must be a registered key

@@ -431,7 +431,8 @@ def test_ssj_oracle_holds_on_directory_layout(spark, sf_dir, tmp_path):
             )
     df = streams.stream_stream_join(spark, d)
     got = sorted(tuple(r) for r in df.collect())
-    # one DATA batch (+ the empty finalization batch availableNow adds)
+    # one DATA batch (no empty finalization batch: the kernel runs with
+    # no-data micro-batches off)
     data_batches = [
         p for p in streams.LAST_QUERY_PROGRESS if p["numInputRows"] > 0
     ]

@@ -163,9 +163,13 @@ def ivf_candidates(spark, sf_dir, nprobe=3, trained=False) -> dict:
         import math
 
         from adlspark.llm.similarity import kmeans_cells
+        from adlspark.tables import rows_df
 
         k = int(math.ceil(math.sqrt(g.count())))
-        cent = kmeans_cells(spark, g, k=k, iters=2)
+        cent = rows_df(
+            spark, kmeans_cells(spark, g, k=k, iters=2),
+            "cell int, centroid array<double>",
+        )
     else:
         expl = g.select("label", F.posexplode("embedding")).select(
             "label", "pos", F.col("col").cast("double").alias("val")
