@@ -45,15 +45,24 @@ Query-scoped sessions: every kernel starts its query on the session
 SparkContext, carrying a copy of the caller's modifiable SQL conf and
 the caller's StreamingQueryListeners (a listener registered on the
 caller's session sees the kernel's progress). Per-query settings land
-on that session only; no kernel writes the caller's conf. Two are set:
+on that session only; no kernel writes the caller's conf. The session
+is kept per caller and per set of overrides and re-synced to the
+caller on each call: Spark registers a listener bus per session and
+never removes it. Two settings are made:
 
-- Stateful partitions: ``spark.sql.shuffle.partitions`` becomes
-  ceil(backlog bytes / ``spark.sql.adaptive.advisoryPartitionSizeInBytes``)
-  clamped to [1, the caller's count] — the count AQE would coalesce a
-  batch shuffle of that input to. AQE cannot re-plan streaming state,
-  and the count is fixed into the checkpoint at first start, so a
-  0.2 MB backlog otherwise ran 32 state stores per micro-batch. A
-  backlog on a non-local path keeps the caller's count.
+- Stateful partitions: ``spark.sql.shuffle.partitions`` becomes the
+  count AQE would coalesce a batch shuffle of the backlog's bytes to
+  (``stateful_partitions``: target size max(minPartitionSize,
+  min(advisory size, bytes / default parallelism)) under the default
+  ``parallelismFirst``), clamped to [1, the caller's count]. AQE cannot
+  re-plan streaming state, and the count is fixed into the checkpoint
+  at first start, so a 0.2 MB backlog otherwise ran 32 state stores per
+  micro-batch. On ``local[4]`` a backlog under 1 MB gets one partition,
+  one of 4–256 MB gets four (the cores stay busy), and a larger one
+  one per 64 MB. The rule reads file bytes, not AQE's post-shuffle
+  bytes; shuffled rows are wider than compressed parquet, so it errs
+  low between those bounds. A backlog on a non-local path keeps the
+  caller's count.
 - No-data micro-batches: off only for kernels whose output never
   depends on watermark-driven emission (``no_data_batches=False``:
   the append-mode inner ``stream_stream_join``, which emits each match
@@ -70,7 +79,9 @@ from __future__ import annotations
 import math
 import os
 import shutil
+import threading
 import uuid
+import weakref
 
 import pandas as pd
 from pyspark.sql import SparkSession
@@ -100,34 +111,94 @@ def _backlog_bytes(paths: list[str]) -> int | None:
     return total
 
 
+def stateful_partitions(spark: SparkSession, n_bytes: int) -> int:
+    """The partition count AQE coalesces a batch shuffle of ``n_bytes``
+    to (Spark's ShufflePartitionsUtil rule, read from ``spark``'s
+    conf), clamped to [1, ``spark.sql.shuffle.partitions``]: target
+    size = max(minPartitionSize, min(advisory size, n_bytes / p)), where
+    p is ``coalescePartitions.minPartitionNum`` or else the default
+    parallelism when ``coalescePartitions.parallelismFirst`` is on, and
+    1 when it is off."""
+    conf = spark.conf
+    as_bytes = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes
+    advisory = as_bytes(conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+    min_size = as_bytes(
+        conf.get("spark.sql.adaptive.coalescePartitions.minPartitionSize")
+    )
+    p = 1
+    if conf.get("spark.sql.adaptive.coalescePartitions.parallelismFirst").lower() == "true":
+        p = int(
+            conf.get("spark.sql.adaptive.coalescePartitions.minPartitionNum")
+            or spark.sparkContext.defaultParallelism
+        )
+    target = max(min_size, min(advisory, math.ceil(n_bytes / p)))
+    cap = int(conf.get("spark.sql.shuffle.partitions"))
+    return min(cap, max(1, math.ceil(n_bytes / target)))
+
+
+# caller session -> {per-query overrides: scoped session}. Bounded per
+# caller (partition counts ≤ the caller's, two no-data settings): each
+# session whose streams manager is touched registers a listener bus on
+# the SparkContext that Spark never removes, so one session per call
+# would grow the bus by one per kernel run. Module-level because the
+# registry signature (spark, sf_dir) leaves no other owner; weak keys
+# drop a caller's entries with the caller.
+_SCOPED: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+_SCOPED_LOCK = threading.Lock()
+
+
+def _sync(scoped: SparkSession, want: dict[str, str], listeners) -> None:
+    """Make ``scoped``'s modifiable conf exactly ``want`` and its
+    streaming listeners exactly ``listeners``."""
+    have = scoped.conf.getAll
+    for k in have:
+        if k not in want and scoped.conf.isModifiable(k):
+            scoped.conf.unset(k)
+    for k, v in want.items():
+        if have.get(k) != v:
+            scoped.conf.set(k, v)
+    jstreams = scoped._jsparkSession.streams()
+    held = list(jstreams.listListeners())
+    for h in held:
+        if not any(h.equals(w) for w in listeners):
+            jstreams.removeListener(h)
+    for w in listeners:
+        if not any(w.equals(h) for h in held):
+            jstreams.addListener(w)
+
+
 def stream_session(
     spark: SparkSession,
     backlog: list[str],
     *,
     no_data_batches: bool = True,
+    conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """The query-scoped session a streaming kernel starts its query on
     (module docstring): the caller's modifiable SQL conf and streaming
-    listeners, stateful partitions sized to the ``backlog`` paths'
-    bytes, no-data micro-batches off unless ``no_data_batches``. The
-    caller's session is only read."""
-    scoped = spark.newSession()
-    for k, v in spark.conf.getAll.items():
-        if spark.conf.isModifiable(k):
-            scoped.conf.set(k, v)
-    jstreams = scoped._jsparkSession.streams()
-    for listener in spark._jsparkSession.streams().listListeners():
-        jstreams.addListener(listener)
+    listeners as they are now, stateful partitions sized to the
+    ``backlog`` paths' bytes, no-data micro-batches off unless
+    ``no_data_batches``, then ``conf``. One session per caller and set
+    of overrides is kept and re-synced on every call. The caller's
+    session is only read."""
+    overrides = dict(conf or {})
     n_bytes = _backlog_bytes(backlog)
     if n_bytes is not None:
-        advisory = spark._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-            spark.conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        overrides["spark.sql.shuffle.partitions"] = str(
+            stateful_partitions(spark, n_bytes)
         )
-        cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        n = min(cap, max(1, math.ceil(n_bytes / advisory)))
-        scoped.conf.set("spark.sql.shuffle.partitions", str(n))
     if not no_data_batches:
-        scoped.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+        overrides["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    want = {k: v for k, v in spark.conf.getAll.items() if spark.conf.isModifiable(k)}
+    want.update(overrides)
+    listeners = list(spark._jsparkSession.streams().listListeners())
+    with _SCOPED_LOCK:
+        sessions = _SCOPED.setdefault(spark, {})
+        key = tuple(sorted(overrides.items()))
+        if key not in sessions:
+            sessions[key] = spark.newSession()
+        scoped = sessions[key]
+        _sync(scoped, want, listeners)
     return scoped
 
 
@@ -412,8 +483,11 @@ def stream_transform_with_state(spark, sf_dir):
         def close(self):
             pass
 
-    scoped = stream_session(spark, [events_path(sf_dir)])
-    scoped.conf.set("spark.sql.streaming.stateStore.providerClass", ROCKSDB_PROVIDER)
+    scoped = stream_session(
+        spark,
+        [events_path(sf_dir)],
+        conf={"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER},
+    )
     ev = events_stream(scoped, sf_dir)
     counts = ev.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=CountProcessor(),

@@ -161,8 +161,11 @@ def rows_df(spark: SparkSession, rows, schema: str) -> DataFrame:
     table reaches the JVM as a local relation, so all later plan
     evaluation stays JVM-side. ``schema`` is a DDL string; its field
     types and nullability are the frame's, exactly as the list path
-    gives them. Naive ``datetime`` values read as session-zone wall
-    time (the pandas path's rule)."""
+    gives them. Values match the list path's too, except naive
+    ``datetime``s: they read as wall time in
+    ``spark.sql.session.timeZone`` (the pandas path's rule), where the
+    list path reads them in the Python process's local zone, so the two
+    agree only when those zones are the same."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
     from pyspark.sql.types import _parse_datatype_string

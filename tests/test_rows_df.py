@@ -1,8 +1,12 @@
 """``tables.rows_df``: small driver-side tables through one Arrow table.
 
 Same schema and rows as ``spark.createDataFrame(list, ddl)`` — nulls,
-empty input, timestamps and arrays included — but planned as a JVM
-local relation, so evaluating it never starts a Python worker.
+empty input and arrays included — but planned as a JVM local relation,
+so evaluating it never starts a Python worker. Naive timestamps are
+the one difference: rows_df reads them as session-zone wall time, the
+list path in the Python process's local zone, so they are checked as
+Spark renders them in the session zone (independent of the process's
+TZ) and left out of the list-path comparison.
 """
 
 from __future__ import annotations
@@ -10,6 +14,7 @@ from __future__ import annotations
 import datetime
 
 import pytest
+from pyspark.sql import functions as F
 
 from adlspark.tables import rows_df
 
@@ -29,7 +34,18 @@ def test_rows_df_matches_list_path(spark, rows):
     got = rows_df(spark, rows, DDL)
     want = spark.createDataFrame(rows, DDL)
     assert got.schema == want.schema
-    assert got.collect() == want.collect()
+    assert got.drop("at").collect() == want.drop("at").collect()
+
+
+@pytest.mark.parametrize("zone", ["UTC", "America/Lima"])
+def test_rows_df_naive_timestamps_are_session_wall_time(spark, zone):
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.session.timeZone", zone)
+    got = rows_df(caller, ROWS, DDL).select(
+        F.date_format("at", "yyyy-MM-dd HH:mm:ss.SSSSSS").alias("at")
+    )
+    want = [r[5] and r[5].strftime("%Y-%m-%d %H:%M:%S.%f") for r in ROWS]
+    assert [r.at for r in got.collect()] == want
 
 
 def test_rows_df_is_a_local_relation(spark):
